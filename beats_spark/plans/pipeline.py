@@ -14,7 +14,10 @@ Everything before the write is lazily-composed Column expressions, so
 Catalyst handles pushdown/pruning/reordering; the write is ONE pass
 (partitioned by sink × bucket); metrics ride on Observations (no extra
 scan); the manifest aggregation re-reads only 3 columns of the written
-parquet (column pruning makes it ~free relative to the main pass).
+parquet. That commit is NOT free: on a 4-vCPU VM (local[4], 3g heap)
+a warm 250k-row, 448-file fan-out pass takes ~8.3 s, of which ~3.5 s
+is the commit (the re-read plus the _manifest and _metrics writes);
+at 1M rows it is ~4.8 s of ~13.7 s.
 
 Scale notes (100 TB): the only shuffle is the pre-write repartition by
 (sink, part_id), which is required anyway to control output file

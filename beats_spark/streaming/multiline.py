@@ -39,6 +39,17 @@ OUT_SCHEMA = T.StructType(
     ]
 )
 
+#: the batch combine keys lines by any long order (a scan's
+#: monotonically_increasing_id spans partitions in its high bits)
+BATCH_OUT_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("first_turn_idx", T.LongType()),
+        T.StructField("doc", T.StringType()),
+        T.StructField("n_lines", T.IntegerType()),
+    ]
+)
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("first_turn_idx", T.IntegerType()),
@@ -176,7 +187,8 @@ def multiline_batch(
     """Batch combine: per conversation in stable turn order; the tail
     flushes at group end (harvester EOF). ``flush_pattern`` closes an
     event on a matching line; ``timeout`` + ``ts_col`` (epoch seconds)
-    replay the idle flush on recorded timestamps."""
+    replay the idle flush on recorded timestamps. ``turn_idx`` may be
+    any int or long order key; ``first_turn_idx`` comes back as long."""
     if timeout is not None and ts_col is None:
         raise ValueError("batch timeout flush needs ts_col")
     machine = _mk_machine(
@@ -198,7 +210,7 @@ def multiline_batch(
         )
 
     cols = ["conv_id", "turn_idx", "text"] + ([ts_col] if ts_col else [])
-    return df.select(*cols).groupBy("conv_id").applyInPandas(fn, OUT_SCHEMA)
+    return df.select(*cols).groupBy("conv_id").applyInPandas(fn, BATCH_OUT_SCHEMA)
 
 
 def multiline_stream(

@@ -21,6 +21,12 @@ thousands of natural file splits; line order within one file is scan
 order, and the multiline chain id is computed per file exactly like
 the docker/CRI reader. Prints one JSON line (sentinel
 ``MODULE_INGEST_RESULT``) with row/error counts.
+
+The job is ONE Spark job: the row/error counts come from an
+Observation on the parquet write (the publisher pipeline's observer
+counts events in flight — libbeat/publisher/pipeline/monitoring.go),
+so the scan → multiline → ingest chain runs once, never re-read for
+its stats.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ from __future__ import annotations
 import argparse
 import json
 import time
+import uuid
 
 
 def run(
@@ -38,6 +45,7 @@ def run(
     multiline: dict | None = None,
     exclude_lines: str | None = None,
 ) -> dict:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from beats_spark.operators.ingest import load_ingest_pipeline
@@ -55,14 +63,16 @@ def run(
     if multiline:
         from beats_spark.streaming.multiline import multiline_batch
 
+        # the long rowid orders lines within a file: it spans scan
+        # partitions (partition index in the high bits), so no int key
         lines = raw.select(
             F.col("file").alias("conv_id"),
-            F.col("rowid").cast("int").alias("turn_idx"),
+            F.col("rowid").alias("turn_idx"),
             F.col("message").alias("text"),
         )
         events = multiline_batch(lines, **multiline)
         df = events.select(
-            F.col("first_turn_idx").cast("long").alias("rowid"),
+            F.col("first_turn_idx").alias("rowid"),
             F.col("doc").alias("message"),
             F.when(F.col("n_lines") > 1, F.array(F.lit("multiline"))).alias(
                 "log.flags"
@@ -78,14 +88,16 @@ def run(
     df = df.withColumn("@timestamp", F.lit(None).cast("string"))
 
     out = pipe.apply(df)
-    err_col = next((c for c in out.columns if c == "error.message"), None)
-    agg = [F.count("*").alias("rows")]
-    if err_col:
-        agg.append(F.count(F.col(f"`{err_col}`")).alias("errors"))
-    stats = out.agg(*agg).collect()[0].asDict()
-    out.write.mode("overwrite").parquet(output_path)
-    stats["output"] = output_path
+    # stats ride on the write: observation names must be unique
+    # within a SparkSession
+    obs = Observation(f"module_ingest_{uuid.uuid4().hex[:8]}")
+    counts = [F.count(F.lit(1)).alias("rows")]
+    if "error.message" in out.columns:
+        counts.append(F.count(F.col("`error.message`")).alias("errors"))
+    out.observe(obs, *counts).write.mode("overwrite").parquet(output_path)
+    stats = {k: int(v) for k, v in obs.get.items()}
     stats.setdefault("errors", 0)
+    stats["output"] = output_path
     return stats
 
 
@@ -98,7 +110,7 @@ def main() -> None:
     ap.add_argument("--multiline-negate", action="store_true")
     ap.add_argument("--multiline-match", default="after")
     ap.add_argument("--exclude-lines")
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
 
     from beats_spark.session import build_session
